@@ -1,10 +1,12 @@
 package graft.etl
 
 import graft.model.InfluxPoint
+import graft.sources.{InfluxDataWriter, PointOrdinals}
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.SQLExecution
 
-import java.io.OutputStream
-import java.net.{HttpURLConnection, URL}
+import java.io.IOException
+import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 
 /** S3: the InfluxDB batch sink, rebuilt as an executor-parallel
@@ -12,8 +14,9 @@ import java.nio.charset.StandardCharsets
   * synchronously one 10k batch at a time from a single thread,
   * sqllite2influxdb.py:100-161).
   *
-  * Design: `Dataset[InfluxPoint].foreachPartition` — each executor partition
-  * builds line-protocol strings locally and POSTs straight to
+  * Design: every partition runs the one per-task line writer,
+  * [[graft.sources.InfluxDataWriter]] (the same one `format("influx")`
+  * runs), which builds line-protocol strings locally and POSTs straight to
   * `/api/v2/write`, giving N-way parallel writes with bounded memory
   * (O(batchSize) lines resident, mirroring the reference's O(BATCH_SIZE)
   * pull loop at sqllite2influxdb.py:183-189). Idempotent by Influx point
@@ -27,10 +30,11 @@ object InfluxSink {
 
   final case class Config(url: String, org: String, bucket: String,
                           token: String, batchSize: Int = 10000,
-                          pointByPoint: Boolean = false,
-                          connectTimeoutMs: Int = 10000,
-                          readTimeoutMs: Int = 30000,
-                          maxRetries: Int = 3)
+                          pointByPoint: Boolean = false)
+
+  private val ConnectTimeoutMs = 10000
+  private val ReadTimeoutMs = 30000
+  private val MaxRetries = 3
 
   /** S4: config from the environment with fail-fast validation, mirroring
     * the reference's .env load + exit(1) on missing values
@@ -89,66 +93,101 @@ object InfluxSink {
     def writeBatch(lines: Seq[String]): Unit
   }
 
+  /** The one Influx v2 HTTP call every client here makes: POST `body` to
+    * `cfg.url + path` with the token, fixed connect/read timeouts and
+    * URL-encoded query parameters (an org such as `home lab` or a bucket
+    * such as `a&b` arrives intact). The response body is always read
+    * whole — the error body on >= 400 — so keep-alive connections stay
+    * reusable. Returns (status, body). */
+  private[graft] def request(cfg: Config, path: String,
+                             params: Seq[(String, String)],
+                             contentType: String, body: Array[Byte],
+                             accept: Option[String] = None): (Int, String) = {
+    val query = params.map { case (k, v) =>
+      k + "=" + URLEncoder.encode(v, StandardCharsets.UTF_8).replace("+", "%20")
+    }.mkString("&")
+    val conn = URI.create(s"${cfg.url}$path?$query").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setConnectTimeout(ConnectTimeoutMs)
+    conn.setReadTimeout(ReadTimeoutMs)
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    conn.setFixedLengthStreamingMode(body.length)
+    conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
+    conn.setRequestProperty("Content-Type", contentType)
+    accept.foreach(conn.setRequestProperty("Accept", _))
+    val out = conn.getOutputStream
+    try out.write(body) finally out.close()
+    val code = conn.getResponseCode
+    val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    val text =
+      if (in == null) ""
+      else try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    (code, text)
+  }
+
+  /** [[request]] for calls with no retry: any status >= 300 fails fast
+    * with `what` and the start of the error body (quirk Q8). */
+  private[graft] def requestOk(cfg: Config, what: String, path: String,
+                               params: Seq[(String, String)],
+                               contentType: String, body: String,
+                               accept: Option[String] = None): String = {
+    val (code, text) = request(cfg, path, params, contentType,
+      body.getBytes(StandardCharsets.UTF_8), accept)
+    if (code >= 300)
+      throw new RuntimeException(s"$what failed: HTTP $code ${text.take(300)}")
+    text
+  }
+
   /** Production-posture HTTP transport: connect/read timeouts, response
     * body always drained (keep-alive connections are reusable), bounded
     * exponential-backoff retry on 5xx/429/IO errors. 4xx (other than 429)
     * is a permanent error — the batch is malformed, retrying can't help. */
   final class HttpLineWriter(cfg: Config) extends LineWriter {
-    private def drain(conn: HttpURLConnection): String = {
-      val s = if (conn.getResponseCode >= 400) conn.getErrorStream
-              else conn.getInputStream
-      if (s == null) "" else
-        try new String(s.readAllBytes(), StandardCharsets.UTF_8).take(500)
-        finally s.close()
-    }
-
-    private def post(body: Array[Byte]): Int = {
-      val url = new URL(
-        s"${cfg.url}/api/v2/write?org=${cfg.org}&bucket=${cfg.bucket}&precision=ns")
-      val conn = url.openConnection().asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(cfg.connectTimeoutMs)
-      conn.setReadTimeout(cfg.readTimeoutMs)
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setFixedLengthStreamingMode(body.length)
-      conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-      conn.setRequestProperty("Content-Type", "text/plain; charset=utf-8")
-      val out: OutputStream = conn.getOutputStream
-      try out.write(body) finally out.close()
-      val code = conn.getResponseCode
-      val detail = drain(conn)
-      if (code >= 400 && code < 500 && code != 429)
-        throw new RuntimeException(s"influx write rejected: HTTP $code $detail")
-      code
-    }
-
     override def writeBatch(lines: Seq[String]): Unit = {
       if (lines.isEmpty) return
       val body = lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
+      val params = Seq("org" -> cfg.org, "bucket" -> cfg.bucket,
+        "precision" -> "ns")
       var attempt = 0
       while (true) {
-        val failure: Option[String] =
-          try { val c = post(body); if (c < 300) return else Some(s"HTTP $c") }
-          catch {
-            case e: java.io.IOException => Some(e.toString)
+        val failure: String =
+          try {
+            val (code, detail) = request(cfg, "/api/v2/write", params,
+              "text/plain; charset=utf-8", body)
+            if (code < 300) return
+            if (code >= 400 && code < 500 && code != 429)
+              throw new RuntimeException(
+                s"influx write rejected: HTTP $code ${detail.take(500)}")
+            s"HTTP $code"
+          } catch {
+            case e: IOException => e.toString
           }
         attempt += 1
-        if (attempt > cfg.maxRetries)
+        if (attempt > MaxRetries)
           throw new RuntimeException(
-            s"influx write failed after ${cfg.maxRetries} retries: ${failure.get}")
+            s"influx write failed after $MaxRetries retries: $failure")
         Thread.sleep(200L << (attempt - 1)) // 200/400/800ms backoff
       }
     }
   }
 
-  /** Write a point Dataset. Partition-parallel; within a partition, batches
-    * of `batchSize` exactly like the reference's fetchmany loop. */
+  /** Write a point Dataset and return the number of lines written, from
+    * one execution of its plan. Every partition runs the one per-task
+    * line writer, [[graft.sources.InfluxDataWriter]], which batches
+    * `batchSize` lines exactly like the reference's fetchmany loop; the
+    * result is the sum of the partitions' committed line counts. */
   def write(points: Dataset[InfluxPoint], cfg: Config,
-            writerFactory: Config => LineWriter = new HttpLineWriter(_)): Unit = {
-    val batch = if (cfg.pointByPoint) 1 else cfg.batchSize
-    points.foreachPartition { it: Iterator[InfluxPoint] =>
-      val w = writerFactory(cfg)
-      it.map(toLine).grouped(batch).foreach(g => w.writeBatch(g))
+            writerFactory: Config => LineWriter = new HttpLineWriter(_)): Long = {
+    val ords = PointOrdinals.resolve(points.schema)
+    val qe = points.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("influx write")) {
+      qe.toRdd.mapPartitionsWithIndex { (partitionId, rows) =>
+        val w = new InfluxDataWriter(partitionId, cfg, writerFactory(cfg), ords)
+        rows.foreach(w.write)
+        Iterator.single(w.commit().nLines)
+      }.fold(0L)(_ + _)
     }
   }
 

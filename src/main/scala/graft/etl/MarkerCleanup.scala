@@ -3,8 +3,6 @@ package graft.etl
 import graft.model.InfluxPoint
 import graft.sources.{InfluxScan, InfluxWatermarkSource}
 
-import java.io.OutputStream
-import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 
@@ -153,61 +151,20 @@ object MarkerCleanup {
       * the `datatype` annotation explicitly — without it every field
       * would silently parse as double and a states point's string field
       * would be dropped from the replay. */
-    override def queryAnnotated(flux: String): String = {
-      val url = new URL(s"${cfg.url}/api/v2/query?org=${cfg.org}")
-      val conn = url.openConnection().asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(cfg.connectTimeoutMs)
-      conn.setReadTimeout(cfg.readTimeoutMs)
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-      conn.setRequestProperty("Content-Type", "application/json")
-      conn.setRequestProperty("Accept", "application/csv")
-      val body = (s"""{"query": "${jsonEsc(flux)}", "dialect": """ +
-        """{"header": true, "annotations": ["datatype"]}}""")
-        .getBytes(StandardCharsets.UTF_8)
-      val out: OutputStream = conn.getOutputStream
-      try out.write(body) finally out.close()
-      val code = conn.getResponseCode
-      if (code >= 300) {
-        val err = Option(conn.getErrorStream)
-          .map(s => try new String(s.readAllBytes(),
-            StandardCharsets.UTF_8).take(300) finally s.close())
-          .getOrElse("")
-        throw new RuntimeException(s"influx query failed: HTTP $code $err")
-      }
-      val s = conn.getInputStream
-      try new String(s.readAllBytes(), StandardCharsets.UTF_8)
-      finally s.close()
-    }
+    override def queryAnnotated(flux: String): String =
+      InfluxSink.requestOk(cfg, "influx query", "/api/v2/query",
+        Seq("org" -> cfg.org), "application/json",
+        s"""{"query": "${jsonEsc(flux)}", "dialect": """ +
+          """{"header": true, "annotations": ["datatype"]}}""",
+        Some("application/csv"))
 
     override def write(lines: Seq[String]): Unit = writer.writeBatch(lines)
     override def delete(startIso: String, stopIso: String,
-                        predicate: String): Unit = {
-      val url = new URL(
-        s"${cfg.url}/api/v2/delete?org=${cfg.org}&bucket=${cfg.bucket}")
-      val conn = url.openConnection().asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(cfg.connectTimeoutMs)
-      conn.setReadTimeout(cfg.readTimeoutMs)
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-      conn.setRequestProperty("Content-Type", "application/json")
-      val body = (s"""{"start": "$startIso", "stop": "$stopIso", """ +
-        s""""predicate": "${escQuoted(predicate)}"}""")
-        .getBytes(StandardCharsets.UTF_8)
-      val out: OutputStream = conn.getOutputStream
-      try out.write(body) finally out.close()
-      val code = conn.getResponseCode
-      if (code >= 300) {
-        val err = Option(conn.getErrorStream)
-          .map(s => try new String(s.readAllBytes(),
-            StandardCharsets.UTF_8).take(300) finally s.close())
-          .getOrElse("")
-        throw new RuntimeException(s"influx delete failed: HTTP $code $err")
-      }
-      Option(conn.getInputStream).foreach(_.close())
-    }
+                        predicate: String): Unit =
+      InfluxSink.requestOk(cfg, "influx delete", "/api/v2/delete",
+        Seq("org" -> cfg.org, "bucket" -> cfg.bucket), "application/json",
+        s"""{"start": "$startIso", "stop": "$stopIso", """ +
+          s""""predicate": "${escQuoted(predicate)}"}""")
   }
 
   /** Backslash-and-quote escaping, shared by the JSON delete body and the

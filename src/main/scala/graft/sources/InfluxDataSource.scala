@@ -22,8 +22,9 @@ import scala.collection.mutable.ArrayBuffer
   * (measurement, tagset, time).
   *
   * Options: url, org, bucket, token, batchSize, pointByPoint — same knobs
-  * as the reference's .env (S4). The foreachPartition writer in
-  * [[graft.etl.InfluxSink]] remains as the lightweight v1 path.
+  * as the reference's .env (S4). [[graft.etl.InfluxSink.write]] runs the
+  * same per-task [[InfluxDataWriter]] over a point Dataset and returns the
+  * lines written.
   */
 class InfluxDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "influx"
@@ -370,8 +371,10 @@ final case class InfluxDataWriterFactory(cfg: InfluxSink.Config,
     new InfluxDataWriter(partitionId, cfg, InfluxTransports.resolve(cfg), ords)
 }
 
-/** Per-task writer: O(batchSize) lines resident, flush on boundary and at
-  * commit. Row layout is the fixed influxPoint schema. */
+/** The one per-task line encoder and batcher, shared by the DSv2 batch and
+  * streaming writes and [[graft.etl.InfluxSink.write]]: O(batchSize) lines
+  * resident, flush on boundary and at commit, which reports the lines
+  * written. Columns are found by name through [[PointOrdinals]]. */
 final class InfluxDataWriter(partitionId: Int, cfg: InfluxSink.Config,
                              transport: InfluxSink.LineWriter,
                              ords: PointOrdinals)
@@ -396,6 +399,8 @@ final class InfluxDataWriter(partitionId: Int, cfg: InfluxSink.Config,
   }
 
   override def write(row: InternalRow): Unit = {
+    // getLong reads a NULL as 0: without this a point would land at epoch 0
+    require(!row.isNullAt(ords.timeMs), "influx write: time_ms is NULL")
     val p = InfluxPoint(
       measurement = row.getUTF8String(ords.measurement).toString,
       tags = strMap(row, ords.tags),
@@ -412,7 +417,7 @@ final class InfluxDataWriter(partitionId: Int, cfg: InfluxSink.Config,
     buf.clear()
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): InfluxCommit = {
     flush()
     InfluxCommit(partitionId, total)
   }

@@ -19,12 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[graft] object InfluxRollup {
 
-  private def post(cfg: InfluxSink.Config)(fluxSrc: String): String =
-    InfluxReadTransports.testOverride match {
-      case Some(f) => f(fluxSrc)
-      case None => InfluxWatermarkSource.postFlux(cfg, fluxSrc)
-    }
-
   def partials(cfg: InfluxSink.Config, specs: Seq[InfluxScan.AggSpec],
                bucketMs: Long, startMs: Long, stopMs: Option[Long],
                measurement: Option[String], field: Option[String],
@@ -142,8 +136,8 @@ private[graft] object InfluxRollup {
 
     def minMaxWindowed(sortCol: String, desc: Boolean,
                        prep: String = ""): Seq[InfluxScan.Sample] =
-      reEnforced(post(cfg)(InfluxScan.flux(cfg.bucket, startMs, stopMs,
-        measurement, field, limit = Some(1), sortDesc = Some(desc),
+      reEnforced(InfluxReadTransports.post(cfg, InfluxScan.flux(cfg.bucket,
+        startMs, stopMs, measurement, field, limit = Some(1), sortDesc = Some(desc),
         sortCol = sortCol, groupCols = groupCols,
         aggPrep = Some(if (prep.nonEmpty) prep
                        else if (sortCol == "_value") "value" else "time"),
@@ -286,8 +280,8 @@ private[graft] object InfluxRollup {
            InfluxScan.AggSumValue | InfluxScan.AggSumSq |
            InfluxScan.AggIncrease | InfluxScan.AggIntegral |
            InfluxScan.AggLocfArea =>
-        val csv = post(cfg)(InfluxScan.flux(cfg.bucket, startMs, stopMs,
-          measurement, field,
+        val csv = InfluxReadTransports.post(cfg, InfluxScan.flux(cfg.bucket,
+          startMs, stopMs, measurement, field,
           count = spec == InfluxScan.AggCountStar,
           countValue = spec == InfluxScan.AggCountValue,
           sumValue = spec == InfluxScan.AggSumValue,
@@ -380,8 +374,8 @@ private[graft] object InfluxRollup {
       //    fallback would have computed from its own identical response;
       //  - unmarked response WITHOUT samples → unattributable (could be a
       //    legacy trusted-aggregate shape): re-POST every spec singly.
-      val csv = post(cfg)(InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs,
-        measurement, field, tagEq, specs.map(branchOf), tagRegex))
+      val csv = InfluxReadTransports.post(cfg, InfluxScan.fusedFlux(cfg.bucket,
+        startMs, stopMs, measurement, field, tagEq, specs.map(branchOf), tagRegex))
       InfluxScan.splitByAgg(csv, specs.length) match {
         case Some(branches) =>
           specs.zipWithIndex.foreach { case (spec, i) =>

@@ -1142,20 +1142,14 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
   private var rows: Iterator[InternalRow] = _
   private var row: InternalRow = _
 
-  private def post(fluxSrc: String): String =
-    InfluxReadTransports.testOverride match {
-      case Some(f) => f(fluxSrc)
-      case None => InfluxWatermarkSource.postFlux(cfg, fluxSrc)
-    }
-
   private def reEnforced(csv: String): Seq[InfluxScan.Sample] =
     InfluxScan.parseSamples(csv).filter(s =>
       s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
         measurement.forall(_ == s.measurement) && field.forall(_ == s.field))
 
   private def minMax(sortCol: String, desc: Boolean): Seq[InfluxScan.Sample] =
-    reEnforced(post(InfluxScan.flux(cfg.bucket, startMs, stopMs, measurement,
-      field, limit = Some(1), sortDesc = Some(desc), sortCol = sortCol,
+    reEnforced(InfluxReadTransports.post(cfg, InfluxScan.flux(cfg.bucket,
+      startMs, stopMs, measurement, field, limit = Some(1), sortDesc = Some(desc), sortCol = sortCol,
       groupCols = groupCols,
       // time sorts drop `_value` before group() (type-collision hygiene);
       // value sorts keep only numeric samples, floated — see flux()
@@ -1205,8 +1199,8 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
   private case object AskEach extends Fetched
 
   private def fusedFetch(fetchSpecs: Seq[InfluxScan.AggSpec]): Fetched = {
-    val csv = post(InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs,
-      measurement, field, Nil, fetchSpecs.map(branchOf)))
+    val csv = InfluxReadTransports.post(cfg, InfluxScan.fusedFlux(cfg.bucket,
+      startMs, stopMs, measurement, field, Nil, fetchSpecs.map(branchOf)))
     InfluxScan.splitByAgg(csv, fetchSpecs.length) match {
       case Some(branches) => Marked(branches)
       case None =>
@@ -1268,8 +1262,8 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
       case InfluxScan.AggMaxTime => localVal(spec, minMax("_time", desc = true))
       case InfluxScan.AggMinValue => localVal(spec, minMax("_value", desc = false))
       case InfluxScan.AggMaxValue => localVal(spec, minMax("_value", desc = true))
-      case agg => fromCsv(agg, post(InfluxScan.flux(cfg.bucket, startMs,
-        stopMs, measurement, field,
+      case agg => fromCsv(agg, InfluxReadTransports.post(cfg,
+        InfluxScan.flux(cfg.bucket, startMs, stopMs, measurement, field,
         count = agg == InfluxScan.AggCountStar,
         countValue = agg == InfluxScan.AggCountValue,
         sumValue = agg == InfluxScan.AggSumValue)))
@@ -1347,8 +1341,8 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
           localMap(spec, minMax("_value", desc = false))
         case InfluxScan.AggMaxValue =>
           localMap(spec, minMax("_value", desc = true))
-        case agg => fromCsv(agg, post(InfluxScan.flux(cfg.bucket, startMs,
-          stopMs, measurement, field,
+        case agg => fromCsv(agg, InfluxReadTransports.post(cfg,
+          InfluxScan.flux(cfg.bucket, startMs, stopMs, measurement, field,
           count = agg == InfluxScan.AggCountStar,
           countValue = agg == InfluxScan.AggCountValue,
           sumValue = agg == InfluxScan.AggSumValue,
@@ -1438,10 +1432,7 @@ final class InfluxPartitionReader(cfg: InfluxSink.Config,
     // is believed exact, but the engine's correctness must not hinge on a
     // server's boundary behavior
     programs.iterator.flatMap { case (flux, keep) =>
-      val csv = InfluxReadTransports.testOverride match {
-        case Some(f) => f(flux)
-        case None => InfluxWatermarkSource.postFlux(cfg, flux)
-      }
+      val csv = InfluxReadTransports.post(cfg, flux)
       InfluxScan.parseSamples(csv).iterator.filter(s =>
         keep(s) && s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
           measurement.forall(_ == s.measurement) && field.forall(_ == s.field))
@@ -1478,6 +1469,10 @@ final class InfluxPartitionReader(cfg: InfluxSink.Config,
 object InfluxReadTransports {
   @volatile var testOverride: Option[String => String] = None
   @volatile var clockOverride: Option[() => Long] = None
+
+  /** One Flux program → its CSV response, through the hook when set. */
+  def post(cfg: graft.etl.InfluxSink.Config, flux: String): String =
+    testOverride.fold(InfluxWatermarkSource.postFlux(cfg, flux))(_(flux))
 }
 
 /** Streaming offset = an epoch-ms high-water mark: everything before it

@@ -2,9 +2,6 @@ package graft.sources
 
 import graft.etl.InfluxSink
 
-import java.io.OutputStream
-import java.net.{HttpURLConnection, URL}
-import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 /** S2: the InfluxDB watermark *read* path — the reference POSTs a Flux
@@ -77,30 +74,10 @@ object InfluxWatermarkSource {
     * response; fail fast on transport/auth errors (quirk Q8 — the
     * reference exit(1)s on watermark-fetch failure). Shared by the
     * watermark scalar and the DSv2 read path. */
-  private[graft] def postFlux(cfg: InfluxSink.Config, flux: String): String = {
-    val url = new URL(s"${cfg.url}/api/v2/query?org=${cfg.org}")
-    val conn = url.openConnection().asInstanceOf[HttpURLConnection]
-    conn.setConnectTimeout(cfg.connectTimeoutMs)
-    conn.setReadTimeout(cfg.readTimeoutMs)
-    conn.setRequestMethod("POST")
-    conn.setDoOutput(true)
-    conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-    conn.setRequestProperty("Content-Type", "application/vnd.flux")
-    conn.setRequestProperty("Accept", "application/csv")
-    val body = flux.getBytes(StandardCharsets.UTF_8)
-    val out: OutputStream = conn.getOutputStream
-    try out.write(body) finally out.close()
-    val code = conn.getResponseCode
-    if (code >= 300) {
-      val err = Option(conn.getErrorStream)
-        .map(s => try new String(s.readAllBytes(), StandardCharsets.UTF_8).take(300)
-                  finally s.close())
-        .getOrElse("")
-      throw new RuntimeException(s"influx query failed: HTTP $code $err")
-    }
-    val s = conn.getInputStream
-    try new String(s.readAllBytes(), StandardCharsets.UTF_8) finally s.close()
-  }
+  private[graft] def postFlux(cfg: InfluxSink.Config, flux: String): String =
+    InfluxSink.requestOk(cfg, "influx query", "/api/v2/query",
+      Seq("org" -> cfg.org), "application/vnd.flux", flux,
+      Some("application/csv"))
 
   /** POST the Flux query; fail fast on transport/auth errors, None on
     * empty. */

@@ -107,6 +107,19 @@ class InfluxSinkSpec extends AnyFunSuite with Matchers {
     all(batches.map(_.size)) shouldBe 1
   }
 
+  test("write: a NULL time_ms fails the write instead of landing at epoch 0") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq(("m", Map("t" -> "v"), Map("value" -> 1.0),
+        Map.empty[String, String], Option.empty[Long]))
+      .toDF("measurement", "tags", "fields_num", "fields_str", "time_ms")
+    val cfg = InfluxSink.Config("http://x", "o", "b", "tok")
+    val e = intercept[Exception](
+      InfluxSink.write(InfluxSink.asPoints(df), cfg, _ => RecordingWriter))
+    e.getMessage should include("time_ms")
+    RecordingWriter.drain().flatten shouldBe empty
+  }
+
   test("configFromEnv: fail-fast on missing/invalid values (Q8)") {
     val good = Map("INFLUXDB_URL" -> "http://i:8086", "INFLUXDB_ORG" -> "o",
       "INFLUXDB_BUCKET" -> "b", "INFLUXDB_TOKEN" -> "t", "BATCH_SIZE" -> "500",

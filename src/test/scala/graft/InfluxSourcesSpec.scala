@@ -93,6 +93,50 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("org and bucket travel URL-encoded: a write, a watermark query " +
+    "and a delete with org 'home lab' and bucket 'a&b' reach the server " +
+    "decoded") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Map[String, String])]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        ex.getRequestBody.readAllBytes()
+        def dec(s: String) = java.net.URLDecoder.decode(s, StandardCharsets.UTF_8)
+        val params = Option(ex.getRequestURI.getRawQuery).toSeq
+          .flatMap(_.split('&')).map(_.split("=", 2) match {
+            case Array(k, v) => dec(k) -> dec(v)
+            case Array(k) => dec(k) -> ""
+          }).toMap
+        seen.add(ex.getRequestURI.getPath -> params)
+        val bytes = if (ex.getRequestURI.getPath.endsWith("/query"))
+          annotatedCsv.getBytes(StandardCharsets.UTF_8) else Array.emptyByteArray
+        if (bytes.isEmpty) ex.sendResponseHeaders(204, -1)
+        else {
+          ex.sendResponseHeaders(200, bytes.length)
+          ex.getResponseBody.write(bytes)
+        }
+        ex.close()
+      }
+    })
+    server.start()
+    try {
+      val c = InfluxSink.Config(s"http://127.0.0.1:${server.getAddress.getPort}",
+        "home lab", "a&b", "tok")
+      new InfluxSink.HttpLineWriter(c).writeBatch(Seq("m v=1 1"))
+      InfluxWatermarkSource.oldestTimestamp(c) shouldBe
+        Some(Instant.parse("2023-05-01T12:34:56Z"))
+      new graft.etl.MarkerCleanup.HttpTransport(c)
+        .delete("1970-01-01T00:00:00Z", "2023-01-01T00:00:00Z", "_measurement=\"m\"")
+      val byPath = seen.toArray(Array.empty[(String, Map[String, String])]).toMap
+      byPath.keySet shouldBe Set("/api/v2/write", "/api/v2/query", "/api/v2/delete")
+      byPath("/api/v2/write") shouldBe
+        Map("org" -> "home lab", "bucket" -> "a&b", "precision" -> "ns")
+      byPath("/api/v2/query") shouldBe Map("org" -> "home lab")
+      byPath("/api/v2/delete") shouldBe Map("org" -> "home lab", "bucket" -> "a&b")
+    } finally server.stop(0)
+  }
+
   test("S3 end-to-end: sink posts line protocol over real HTTP in batches") {
     val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
